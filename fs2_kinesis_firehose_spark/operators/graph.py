@@ -39,12 +39,6 @@ __all__ = [
 ]
 
 
-# superstep exchange-reuse global override (A/B harness:
-# scripts/ab_graph_pin.py); False degrades every _pinned_by_key to the
-# plain lazy checkpoint (pre-r12 behavior: the superstep join replans the
-# edge side each iteration)
-_EXCHANGE_REUSE = True
-
 # Row quantum for the scale-adaptive pin sizing below.  Fixed-cost-vs-
 # divisible-compute optimum, same derivation as the streaming state-store
 # sizing (streaming/replay.py): every superstep stage over a pinned frame
@@ -110,7 +104,7 @@ def _pinned_by_key(
     pure cost — measured in the r12 sf1 A/B (PLANS.md Audit C), which is
     why each operator carries its own measured ``reuse_exchange`` default
     and ``enabled=False`` degrades to the plain lazy checkpoint."""
-    if not (enabled and _EXCHANGE_REUSE):
+    if not enabled:
         return df.localCheckpoint(eager=False)
     spark = df.sparkSession
     # two-step: first truncate the (possibly expensive) upstream lineage
@@ -717,9 +711,7 @@ def hits(
     # each by its step's key; every iteration's edge-side exchange (and
     # SMJ sort) is then reused instead of recomputed.  Both pins are of
     # the SAME edge frame, so size once and share (one count job, not two).
-    n_pin = (
-        _sized_pin_partitions(e) if (reuse_exchange and _EXCHANGE_REUSE) else None
-    )
+    n_pin = _sized_pin_partitions(e) if reuse_exchange else None
     e_src = _pinned_by_key(e, "src", reuse_exchange, n_pin)
     e_dst = _pinned_by_key(e, "dst", reuse_exchange, n_pin)
     nodes = _pinned_by_key(

@@ -1,8 +1,9 @@
 """SparkSession factory.
 
-Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (default 32) in one JVM; the
-configuration below is chosen so the *same logical plans* scale to a
-1000-executor cluster reading ~100 TB:
+Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (default: the cores this
+process may run on) in one JVM with a ``$SPARK_DRIVER_MEMORY`` heap (default:
+min(24g, ¾ of physical memory)); the configuration below is chosen so the
+*same logical plans* scale to a 1000-executor cluster reading ~100 TB:
 
 - AQE on (runtime shuffle-partition coalescing, skew-join splitting, dynamic
   broadcast conversion) — the single most important knob at scale.
@@ -25,7 +26,20 @@ DEFAULT_APP_NAME = "fs2-kinesis-firehose-spark"
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``$SPARK_GRAFT_CPUS``, else the cores this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
+
+
+def default_driver_memory() -> str:
+    """``$SPARK_DRIVER_MEMORY``, else min(24g, ¾ of MemTotal) — a fixed 24g
+    heap overcommits any box with less than ~32 GB of RAM."""
+    mem = os.environ.get("SPARK_DRIVER_MEMORY")
+    if mem:
+        return mem
+    with open("/proc/meminfo") as f:
+        total_kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{min(24 * 1024, total_kib * 3 // 4 // 1024)}m"
 
 
 def get_spark(
@@ -64,7 +78,7 @@ def get_spark(
         # (50.3 s vs 48.7 s isolated sf1 run; PLANS.md r13 adjudication).
         .config("spark.buffer.pageSize", "32m")
         # --- local-mode ergonomics ---------------------------------------
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.streaming.schemaInference", "true")

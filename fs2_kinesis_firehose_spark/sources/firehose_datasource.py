@@ -14,10 +14,13 @@ into ≤500-record requests (A2's count bound) and delivers with
 shrink-to-failed retry (A8, Firehose.scala:70-105 semantics); commit messages
 aggregate per-partition delivery accounting back on the driver.
 
-Options: ``streamName`` (required), ``batchSize`` (≤500), ``maxRetries``,
-``baseBackoffMs``, ``separator`` (appended if the upstream didn't frame),
-``spoolDir`` (use the in-memory fake client, spooling for observation —
-tests/CI), region/endpoint passthrough for the real boto3 client.
+Options: ``streamName`` (required), ``batchSize`` (≤500), ``maxBatchBytes``
+(≤4 MiB), ``maxRecordBytes`` (≤1,000 KiB), ``maxRetries``, ``baseBackoffMs``,
+``separator`` (appended if the upstream didn't frame), ``spoolDir`` (use the
+in-memory fake client, spooling for observation — tests/CI),
+region/endpoint passthrough for the real boto3 client.  They are parsed into
+one ``ProducerSettings``, so a value outside the AWS quotas raises at
+``save()``/``start()``.
 """
 
 from __future__ import annotations
@@ -32,11 +35,16 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from fs2_kinesis_firehose_spark.firehose.client import (
+    boto3_client_factory,
+    fake_client_factory,
+)
 from fs2_kinesis_firehose_spark.firehose.retry import put_batch_with_retry
 from fs2_kinesis_firehose_spark.firehose.settings import (
     MAX_BATCH_BYTES,
     MAX_BATCH_SIZE,
     MAX_RECORD_BYTES,
+    ProducerSettings,
     RetryPolicy,
 )
 
@@ -49,51 +57,31 @@ class FirehoseCommitMessage(WriterCommitMessage):
     failed_records: int
 
 
-def _build_client(options: dict[str, str]) -> Any:
-    if options.get("spooldir"):
-        from fs2_kinesis_firehose_spark.firehose.client import FakeFirehose
-
-        return FakeFirehose(spool_dir=options["spooldir"])
-    try:  # pragma: no cover - boto3 absent in CI
-        import boto3  # type: ignore[import-not-found]
-    except ImportError as e:
-        raise RuntimeError(
-            "boto3 not installed; pass .option('spoolDir', ...) to use the fake client"
-        ) from e
-    kwargs: dict[str, Any] = {}
-    if options.get("region"):
-        kwargs["region_name"] = options["region"]
-    if options.get("endpoint"):
-        kwargs["endpoint_url"] = options["endpoint"]
-    return boto3.client("firehose", **kwargs)  # pragma: no cover
-
-
 class _WriterCore:
     """Shared executor-side write loop for batch and streaming writers."""
 
     def __init__(self, options: dict[str, str]) -> None:
         # normalize option keys (Spark lowercases DataSource option names)
-        self.options = {k.lower(): v for k, v in options.items()}
-        if not self.options.get("streamname"):
+        opts = {k.lower(): v for k, v in options.items()}
+        if not opts.get("streamname"):
             raise ValueError("firehose source requires .option('streamName', ...)")
-        self.stream_name = self.options["streamname"]
-        self.batch_size = int(self.options.get("batchsize", MAX_BATCH_SIZE))
-        if not (0 < self.batch_size <= MAX_BATCH_SIZE):
-            raise ValueError(f"batchSize must be in (0, {MAX_BATCH_SIZE}]")
-        # AWS byte quotas (lowerable for tests, never raisable past AWS)
-        self.max_batch_bytes = int(self.options.get("maxbatchbytes", MAX_BATCH_BYTES))
-        self.max_record_bytes = int(self.options.get("maxrecordbytes", MAX_RECORD_BYTES))
-        if not (0 < self.max_batch_bytes <= MAX_BATCH_BYTES):
-            raise ValueError(f"maxBatchBytes must be in (0, {MAX_BATCH_BYTES}]")
-        if not (0 < self.max_record_bytes <= MAX_RECORD_BYTES):
-            raise ValueError(f"maxRecordBytes must be in (0, {MAX_RECORD_BYTES}]")
-        # a single accepted record must never overflow a request
-        self.max_record_bytes = min(self.max_record_bytes, self.max_batch_bytes)
-        self.retry = RetryPolicy(
-            max_retries=int(self.options.get("maxretries", 6)),
-            base_backoff_s=float(self.options.get("basebackoffms", 500)) / 1000.0,
+        # ProducerSettings owns the quota range checks and the record clamp
+        self.settings = ProducerSettings(
+            stream_name=opts["streamname"],
+            batch_size=int(opts.get("batchsize", MAX_BATCH_SIZE)),
+            separator=opts.get("separator", "").encode(),
+            retry=RetryPolicy(
+                max_retries=int(opts.get("maxretries", RetryPolicy.max_retries)),
+                base_backoff_s=float(opts.get("basebackoffms", 500)) / 1000.0,
+            ),
+            max_batch_bytes=int(opts.get("maxbatchbytes", MAX_BATCH_BYTES)),
+            max_record_bytes=int(opts.get("maxrecordbytes", MAX_RECORD_BYTES)),
         )
-        self.separator = self.options.get("separator", "").encode()
+        if opts.get("spooldir"):
+            self.client_factory = fake_client_factory(spool_dir=opts["spooldir"])
+        else:
+            endpoint = {"endpoint_url": opts["endpoint"]} if opts.get("endpoint") else {}
+            self.client_factory = boto3_client_factory(opts.get("region"), **endpoint)
 
     def write(self, iterator: Iterator[Any]) -> FirehoseCommitMessage:
         from pyspark import TaskContext
@@ -102,25 +90,26 @@ class _WriterCore:
 
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx else -1
-        client = _build_client(self.options)
+        settings = self.settings
+        client = self.client_factory()
         n_requests = n_records = failed = 0
 
         def payloads() -> Iterator[bytes]:
             for row in iterator:
                 v = row["value"]
                 payload = v.encode() if isinstance(v, str) else bytes(v)
-                if self.separator:
-                    payload += self.separator
+                if settings.separator:
+                    payload += settings.separator
                 yield payload
 
         for buf, _bytes in slice_requests(
             payloads(),
-            batch_size=self.batch_size,
-            max_batch_bytes=self.max_batch_bytes,
-            max_record_bytes=self.max_record_bytes,
+            batch_size=settings.batch_size,
+            max_batch_bytes=settings.max_batch_bytes,
+            max_record_bytes=settings.max_record_bytes,
         ):
             resp = put_batch_with_retry(
-                client, self.stream_name, [{"Data": p} for p in buf], self.retry
+                client, settings.stream_name, [{"Data": p} for p in buf], settings.retry
             )
             n_requests += 1
             n_records += len(buf)

@@ -73,6 +73,27 @@ def test_requires_stream_name(spark, tmp_path):
         framed.write.format("firehose").option("spoolDir", str(tmp_path)).mode("append").save()
 
 
+@pytest.mark.parametrize(
+    "option, value, field",
+    [
+        ("batchSize", "0", "batch_size"),
+        ("batchSize", "501", "batch_size"),
+        ("maxBatchBytes", str(4 * 1024 * 1024 + 1), "max_batch_bytes"),
+    ],
+)
+def test_rejects_out_of_quota_options(spark, tmp_path, option, value, field):
+    framed = spark.range(3).selectExpr("CAST(string(id) AS BINARY) AS value")
+    with pytest.raises(Exception, match=f"{field} must be in"):
+        (
+            framed.write.format("firehose")
+            .option("streamName", "quota")
+            .option("spoolDir", str(tmp_path))
+            .option(option, value)
+            .mode("append")
+            .save()
+        )
+
+
 def test_streaming_write(spark, sf_smoke, tmp_path):
     spool = str(tmp_path / "spool")
     src_dir = tmp_path / "src"

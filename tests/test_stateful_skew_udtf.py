@@ -1,5 +1,5 @@
 """Tests: applyInPandasWithState accumulation, salted join equivalence,
-UDTF expansion, ANN index partition pruning."""
+UDTF expansion."""
 
 from __future__ import annotations
 
@@ -8,11 +8,8 @@ import time
 
 from pyspark.sql import functions as F
 
-from fs2_kinesis_firehose_spark.operators.ann_index import ann_index_topk, write_ann_index
-from fs2_kinesis_firehose_spark.operators.similarity import brute_force_topk
 from fs2_kinesis_firehose_spark.operators.skew import salted_join
 from fs2_kinesis_firehose_spark.operators.udtf_ops import NgramExploder, register_udtfs
-from fs2_kinesis_firehose_spark.plans import explain_str
 from fs2_kinesis_firehose_spark.streaming.replay import run_to_memory
 from fs2_kinesis_firehose_spark.streaming.stateful import running_user_stats
 from fs2_kinesis_firehose_spark.tables import load_table
@@ -81,19 +78,3 @@ def test_udtf_direct_and_lateral(spark):
     ).collect()
     assert [r.ngram for r in got] == ["a b", "b c"]
 
-
-def test_ann_index_partition_pruning(spark, sf_smoke, tmp_path):
-    emb = load_table(spark, sf_smoke, "embeddings")
-    path = str(tmp_path / "annidx")
-    write_ann_index(emb, path, dim=64, n_planes=6)
-    qv = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    topk = ann_index_topk(spark, path, qv, dim=64, k=5, n_planes=6)
-    got = [r.vec_id for r in topk.collect()]
-    assert got[0] == 0 and len(got) == 5
-    # the bucket IN-filter must prune partitions at the scan
-    plan = explain_str(topk, mode="formatted")
-    assert "PartitionFilters" in plan
-    assert "bucket" in plan.split("PartitionFilters")[1][:200]
-    # pruned candidate set really is a subset of the corpus
-    exact = [r.vec_id for r in brute_force_topk(emb, qv, k=5).collect()]
-    assert got[0] == exact[0] == 0
